@@ -26,10 +26,14 @@ helper falls back automatically.
 from __future__ import annotations
 
 import math
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 
 __all__ = ["local_frame"]
+
+# backslash, quote and the C0/DEL/C1 control characters
+_ESCAPED = re.compile(r"[\\'\x00-\x1f\x7f-\x9f]")
 
 
 def _sql_literal(v) -> str:
@@ -51,18 +55,11 @@ def _sql_literal(v) -> str:
         return repr(v) + "D"
     if isinstance(v, str):
         # escapedStringLiterals is false by default, so backslash
-        # escapes are live inside quoted literals — escape them, the
-        # quote itself, and the control characters that would otherwise
-        # end up raw inside the SQL text.
-        s = (
-            v.replace("\\", "\\\\")
-            .replace("'", "\\'")
-            .replace("\n", "\\n")
-            .replace("\r", "\\r")
-            .replace("\t", "\\t")
-            .replace("\0", "\\0")
-        )
-        return f"'{s}'"
+        # escapes are live inside quoted literals. Every backslash,
+        # quote and control character becomes a fixed-width \uXXXX
+        # escape: a short form like \0 would fuse with following digits
+        # into an octal escape ('x\x0012' would read back as 'x\n').
+        return "'" + _ESCAPED.sub(lambda m: f"\\u{ord(m.group()):04x}", v) + "'"
     if isinstance(v, (list, tuple)):
         return "array(" + ", ".join(_sql_literal(x) for x in v) + ")"
     raise TypeError(

@@ -975,7 +975,7 @@ def incremental_dedup_frame(doc: DataFrame, max_df: int | None = None) -> DataFr
     # per document (sizes, not shingles — cheap at any scale); with it
     # the executed plan drops 18 → 14 exchanges and 7 → 5 parquet
     # scans, and the sizes pass over the shingle set runs exactly once
-    # (scripts/inc_lab.py: parity OK on all variants, best-of-4 fused
+    # (OPTIMIZATION_r13.md §1: parity OK on all variants, best-of-4 fused
     # 1.054 / pinned 1.120 / per-side 1.163 s — locally noise-level,
     # structurally one full-set pass instead of two).
     sizes_all = sh_all.groupBy("doc_id").agg(

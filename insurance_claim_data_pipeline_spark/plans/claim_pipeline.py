@@ -1,12 +1,14 @@
 """End-to-end claim resubmission pipeline (reference: pipeline(),
 claim_pipeline.py:155-233), Spark-first.
 
-Execution shape: one cached canonical DataFrame feeds (a) the candidate
-filter+projection and (b) a single-pass metrics aggregate of conditional
-counts — preserving the reference's one-traversal property (SURVEY.md §4)
-without a driver-side row loop. Candidates are collected to the driver
-only at the JSON-array sink (O1), justified because candidates ≪ input by
-construction; the scalable native variant is write_candidates_jsonl.
+Execution shape: ONE Spark job per run. The metric counters are attached
+to the claims frame with ``DataFrame.observe`` and the candidate filter +
+projection runs on top of it, so the single candidates collect also
+delivers every counter — the reference's one-traversal property
+(SURVEY.md §4) without a cache, a second job or a driver-side row loop.
+Candidates reach the driver at the JSON-array sink (O1) anyway, because
+candidates ≪ input by construction, so their output order is restored
+there with a Python sort instead of a global Spark ``orderBy``.
 """
 
 from __future__ import annotations
@@ -16,13 +18,16 @@ import os
 from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.claims import exclusion_reason, is_eligible, recommended_changes
 from ..sources.claims import load_claims
 
 CANDIDATE_COLUMNS = ["claim_id", "resubmission_reason", "source_system", "recommended_changes"]
+# O1 insertion order: file order, then split offset within the file, then
+# scan order within the split (see sources/claims.py's row-order contract).
+ORDER_COLUMNS = ("_file_idx", "_block_start", "_row_idx")
 
 
 def candidates_frame(claims: DataFrame) -> DataFrame:
@@ -35,13 +40,14 @@ def candidates_frame(claims: DataFrame) -> DataFrame:
         F.col("denial_reason").alias("resubmission_reason"),
         "source_system",
         recommended_changes().alias("recommended_changes"),
-        *[c for c in ("_file_idx", "_block_start", "_row_idx") if c in claims.columns],
+        *[c for c in ORDER_COLUMNS if c in claims.columns],
     )
 
 
-def metrics_frame(claims: DataFrame) -> DataFrame:
-    """A1-A4 + intended-semantics A3 in ONE aggregate pass (conditional
-    counts), so the scan is not recomputed per counter."""
+def metric_columns(claims: DataFrame) -> list[Column]:
+    """A1-A4 + intended-semantics A3 as conditional-count aggregates —
+    for ``claims.observe(...)`` or ``claims.agg(...)``, one pass either
+    way."""
     corrupt = (
         F.col("_corrupt_record").isNotNull()
         if "_corrupt_record" in claims.columns
@@ -55,7 +61,7 @@ def metrics_frame(claims: DataFrame) -> DataFrame:
             F.when(~corrupt & ~eligible & (excl == name), 1)
         ).alias(name)
 
-    return claims.agg(
+    return [
         F.count(F.lit(1)).alias("total_processed"),
         F.count(F.when(F.col("source_system") == "alpha", 1)).alias("alpha"),
         F.count(F.when(F.col("source_system") == "beta", 1)).alias("beta"),
@@ -65,7 +71,7 @@ def metrics_frame(claims: DataFrame) -> DataFrame:
         bucket("too_recent"),
         bucket("non_retryable_or_ambiguous"),
         F.count(F.when(corrupt, 1)).alias("malformed"),
-    )
+    ]
 
 
 @dataclass
@@ -80,24 +86,17 @@ def run_pipeline(
     spark: SparkSession, input_files: list[str], output_dir: str = "."
 ) -> PipelineResult:
     """The reference's pipeline(): ingest → normalize → eligibility →
-    JSON-array sink (O1) + metrics log sink (O2)."""
+    JSON-array sink (O1) + metrics log sink (O2), in one Spark job."""
     routed = load_claims(spark, input_files)
-    claims = routed.claims.cache()
-    try:
-        cand_rows = (
-            candidates_frame(claims)
-            # O1 insertion order: file order, then split offset within the
-            # file, then scan order within the split. (_block_start comes
-            # from _metadata — stable under Spark's split bin-packing;
-            # monotonically_increasing_id alone is only ordered within one
-            # task, so a multi-split file needs the block offset first.)
-            .orderBy("_file_idx", "_block_start", "_row_idx")
-            .drop("_file_idx", "_block_start", "_row_idx")
-            .collect()
-        )
-        m = metrics_frame(claims).collect()[0].asDict()
-    finally:
-        claims.unpersist()
+    # observed BEFORE the candidate filter, so total_processed and the
+    # exclusion buckets see every row
+    observation = Observation()
+    claims = routed.claims.observe(observation, *metric_columns(routed.claims))
+    cand_rows = sorted(
+        candidates_frame(claims).collect(),
+        key=lambda row: tuple(row[c] for c in ORDER_COLUMNS),
+    )
+    m = observation.get
 
     candidates = [{c: row[c] for c in CANDIDATE_COLUMNS} for row in cand_rows]
     metrics = {
@@ -134,10 +133,3 @@ def run_pipeline(
         candidates=candidates,
         metrics=metrics,
     )
-
-
-def write_candidates_jsonl(claims: DataFrame, out_dir: str) -> None:
-    """Scale-path variant of O1: distributed JSONL write (no driver
-    collect). At 100 TB this is the sink you want; the pretty-printed
-    single-array file exists for reference parity only."""
-    candidates_frame(claims).drop("_file_idx", "_block_start", "_row_idx").write.mode("overwrite").json(out_dir)

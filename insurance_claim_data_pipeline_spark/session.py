@@ -339,11 +339,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     return normalize_timestamps(spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")))
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names=TABLE_NAMES):
-    """Read several synthetic tables; returns {name: DataFrame}."""
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
 def parquet_num_rows(sf_dir: str, name: str) -> int:
     """Exact unfiltered row count of one synthetic table, read from the
     parquet FOOTER metadata (sum of per-file ``num_rows``) — no Spark

@@ -4,12 +4,15 @@ extension-dispatch router (S3).
 Reference: claim_pipeline.py:81-99 (load_alpha), :101-114 (load_beta),
 :172-183 (router loop). The generators' fused scan+normalize becomes a
 scan with projection expressions — Catalyst collapses them into the
-file scan, preserving the reference's single-pass property.
+file scan, preserving the reference's single-pass property. Each source
+has ONE projection (``read_alpha``/``read_beta``), used by the batch
+loaders here and by the streaming readers in streaming/claims_stream.py.
 
 Fail-soft mapping:
 - X1 (per-record, :190-212): PERMISSIVE mode + a _corrupt_record column;
   corrupt rows are counted as 'malformed' and excluded from the
-  canonical stream.
+  canonical stream. The alpha CSV read disables column pruning, so
+  malformed-ness does not depend on which columns a consumer reads.
 - X2 (per-file, :176/:213-215): unreadable/unsupported files are
   skipped with a warning and counted once as malformed. Spark is more
   granular than the reference here (a bad row doesn't abandon the rest
@@ -32,12 +35,14 @@ import os
 import stat
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.readwriter import DataFrameReader
+from pyspark.sql.streaming import DataStreamReader
 
 from ..functions.cleaning import lower_norm, none_to_null, parse_claim_date, trim_null
-from ..schemas import ALPHA_RAW_SCHEMA, BETA_RAW_SCHEMA
+from ..schemas import ALPHA_RAW_SCHEMA, BETA_RAW_SCHEMA, CLAIM_SCHEMA
 
 logger = logging.getLogger("insurance_claim_data_pipeline_spark.sources")
 
@@ -48,18 +53,22 @@ def _with_corrupt(schema: T.StructType) -> T.StructType:
     return T.StructType(list(schema.fields) + [T.StructField(_CORRUPT, T.StringType(), True)])
 
 
-def load_alpha(spark: SparkSession, path: str) -> DataFrame:
-    """S1+P1+P3+F1-F4: CSV scan → canonical claim DataFrame.
+def read_alpha(reader: DataFrameReader | DataStreamReader, path: str, *extra: Column) -> DataFrame:
+    """S1+P1+P3+F1-F4: CSV scan → the canonical 7 columns plus
+    ``_corrupt_record`` (and ``extra``). ``reader`` is ``spark.read`` or
+    ``spark.readStream``, so batch and streaming share one projection.
 
     Columns are read as raw strings (csv.DictReader semantics,
     claim_pipeline.py:84); all cleanup is expression-level.
+    ``columnPruning=false`` makes the parser tokenize every column of
+    every row, so a short, long or unterminated row is flagged corrupt
+    whichever columns a consumer references — with pruning on, a plan
+    that reads a subset of columns silently accepts malformed rows.
     """
-    raw = spark.read.csv(
-        path,
-        header=True,
-        schema=_with_corrupt(ALPHA_RAW_SCHEMA),
-        mode="PERMISSIVE",
-        columnNameOfCorruptRecord=_CORRUPT,
+    raw = (
+        reader.schema(_with_corrupt(ALPHA_RAW_SCHEMA))
+        .options(header=True, mode="PERMISSIVE", columnNameOfCorruptRecord=_CORRUPT, columnPruning=False)
+        .csv(path)
     )
     return raw.select(
         trim_null("claim_id").alias("claim_id"),
@@ -70,24 +79,22 @@ def load_alpha(spark: SparkSession, path: str) -> DataFrame:
         parse_claim_date("submitted_at").alias("submitted_at"),
         F.lit("alpha").alias("source_system"),
         F.col(_CORRUPT),
-        F.col("_metadata.file_block_start").alias("_block_start"),
-        F.monotonically_increasing_id().alias("_row_idx"),
+        *extra,
     )
 
 
-def load_beta(spark: SparkSession, path: str) -> DataFrame:
-    """S2+P2+P3+F1-F3: whole-file JSON array scan → canonical claims.
+def read_beta(reader: DataFrameReader | DataStreamReader, path: str, *extra: Column) -> DataFrame:
+    """S2+P2+P3+F1-F3: whole-file JSON array scan → the canonical 7
+    columns plus ``_corrupt_record`` (and ``extra``).
 
     multiLine=True because the file is one top-level array, not JSONL
     (claim_pipeline.py:104 json.load). Beta has no 'None'-literal
     handling (:110) — asymmetry with alpha preserved.
     """
-    raw = spark.read.json(
-        path,
-        schema=_with_corrupt(BETA_RAW_SCHEMA),
-        multiLine=True,
-        mode="PERMISSIVE",
-        columnNameOfCorruptRecord=_CORRUPT,
+    raw = (
+        reader.schema(_with_corrupt(BETA_RAW_SCHEMA))
+        .options(multiLine=True, mode="PERMISSIVE", columnNameOfCorruptRecord=_CORRUPT)
+        .json(path)
     )
     return raw.select(
         trim_null("id").alias("claim_id"),
@@ -98,9 +105,28 @@ def load_beta(spark: SparkSession, path: str) -> DataFrame:
         parse_claim_date("date").alias("submitted_at"),
         F.lit("beta").alias("source_system"),
         F.col(_CORRUPT),
+        *extra,
+    )
+
+
+def _order_columns() -> list[Column]:
+    """The batch row-order key within a file (see the module docstring)."""
+    return [
         F.col("_metadata.file_block_start").alias("_block_start"),
         F.monotonically_increasing_id().alias("_row_idx"),
-    )
+    ]
+
+
+def load_alpha(spark: SparkSession, path: str) -> DataFrame:
+    """Batch alpha claims: canonical columns + ``_corrupt_record`` +
+    ``_block_start``/``_row_idx``."""
+    return read_alpha(spark.read, path, *_order_columns())
+
+
+def load_beta(spark: SparkSession, path: str) -> DataFrame:
+    """Batch beta claims: canonical columns + ``_corrupt_record`` +
+    ``_block_start``/``_row_idx``."""
+    return read_beta(spark.read, path, *_order_columns())
 
 
 @dataclass
@@ -198,28 +224,13 @@ def load_claims(spark: SparkSession, paths: list[str]) -> RouterResult:
         for df in dfs[1:]:
             claims = claims.unionByName(df)
     else:
-        empty_schema = _with_corrupt(
-            T.StructType(
-                [
-                    T.StructField("claim_id", T.StringType()),
-                    T.StructField("patient_id", T.StringType()),
-                    T.StructField("procedure_code", T.StringType()),
-                    T.StructField("denial_reason", T.StringType()),
-                    T.StructField("status", T.StringType()),
-                    T.StructField("submitted_at", T.DateType()),
-                    T.StructField("source_system", T.StringType()),
-                ]
-            )
+        empty_schema = T.StructType(
+            _with_corrupt(CLAIM_SCHEMA).fields
+            + [
+                T.StructField("_block_start", T.LongType()),
+                T.StructField("_row_idx", T.LongType()),
+                T.StructField("_file_idx", T.IntegerType()),
+            ]
         )
-        claims = spark.createDataFrame(
-            [],
-            T.StructType(
-                list(empty_schema.fields)
-                + [
-                    T.StructField("_block_start", T.LongType()),
-                    T.StructField("_row_idx", T.LongType()),
-                    T.StructField("_file_idx", T.IntegerType()),
-                ]
-            ),
-        )
+        claims = spark.createDataFrame([], empty_schema)
     return RouterResult(claims=claims, skipped_files=skipped, failed_files=failed)

@@ -1,7 +1,6 @@
 """Interleaved A/B of arbitrary SQL-conf variants over the bench query
-set — the ab_floor.py harness generalized (r13). One session, variants
-alternated per run so host steal bursts hit both roughly equally;
-best-of-N per (query, variant).
+set (r13). One session, variants alternated per run so host steal
+bursts hit both roughly equally; best-of-N per (query, variant).
 
 Run: python scripts/ab_conf.py "label1:key=val,key=val" "label2:key=val" ...
 Env: AB_RUNS (default 3), AB_QUERIES (comma-sep subset), SPARK_GRAFT_SF_DIR.

@@ -260,29 +260,62 @@ def test_classifier_containment_and_order(spark):
 
 
 def test_corrupt_rows_counted_as_malformed(spark, tmp_path):
-    """X1 (claim_pipeline.py:190-212): a malformed record is counted as
-    malformed and skipped; the rest of the file still processes."""
-    from insurance_claim_data_pipeline_spark.plans.claim_pipeline import metrics_frame
+    """X1 (claim_pipeline.py:190-212): a malformed record (unterminated
+    quote, short row, long row) is counted as malformed and skipped; the
+    rest of the file still processes. The loader decides malformed-ness,
+    so an uncached consumer that reads only some columns, run_pipeline
+    and the streaming twin all agree."""
+    from insurance_claim_data_pipeline_spark.plans.claim_pipeline import (
+        candidates_frame,
+        metric_columns,
+    )
+    from insurance_claim_data_pipeline_spark.streaming.claims_stream import claims_stream
+    from insurance_claim_data_pipeline_spark.streaming.events_stream import run_stream_to_memory
 
-    bad_csv = tmp_path / "emr_bad.csv"
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    bad_csv = drop / "emr_bad.csv"
     bad_csv.write_text(
         "claim_id,patient_id,procedure_code,denial_reason,submitted_at,status\n"
-        'A201,P1,99213,Missing modifier,2025-07-01,denied\n'
+        "A201,P1,99213,Missing modifier,2025-07-01,denied\n"
         '"A202,unterminated-quote,99,x\n'
         "A203,P3,99214,Incorrect NPI,2025-07-02,denied\n"
+        "A204,P4,99215\n"
+        "A205,P5,99216,Missing modifier,2025-07-03,denied,extra\n"
     )
-    routed = load_claims(spark, [str(bad_csv)])
-    # cache() materializes the full rows first — required for CSV corrupt-
-    # record accounting (column pruning would otherwise re-parse only the
-    # referenced columns and miss malformed-ness); run_pipeline does the same
-    claims = routed.claims.cache()
-    try:
-        m = metrics_frame(claims).collect()[0].asDict()
-    finally:
-        claims.unpersist()
-    assert m["malformed"] == 1
-    assert m["total_processed"] == 3
+    claims = load_claims(spark, [str(bad_csv)]).claims
+    cands = [r["claim_id"] for r in candidates_frame(claims).orderBy("_row_idx").collect()]
+    assert cands == ["A201", "A203"]
+    m = claims.agg(*metric_columns(claims)).collect()[0].asDict()
+    assert m["malformed"] == 3
+    assert m["total_processed"] == 5
     assert m["flagged_for_resubmission"] == 2
+
+    res = run_pipeline(spark, [str(bad_csv)], str(tmp_path))
+    assert [c["claim_id"] for c in res.candidates] == ["A201", "A203"]
+    assert res.metrics["total_processed"] == 5
+    assert res.metrics["excluded_by_reason"]["malformed"] == 3
+    assert res.metrics["flagged_for_resubmission"] == 2
+
+    streamed = run_stream_to_memory(
+        candidates_frame(claims_stream(spark, str(drop))), spark, output_mode="append"
+    )
+    assert sorted(r["claim_id"] for r in streamed.collect()) == ["A201", "A203"]
+
+
+def test_run_pipeline_is_one_spark_job(spark, tmp_path):
+    """Candidates and every metric come from ONE traversal: the metrics
+    are observed on the candidates job, and the output order is restored
+    on the driver — no cache, no second collect, no global sort."""
+    sc = spark.sparkContext
+    group = f"one_job_{os.getpid()}_{id(tmp_path)}"
+    sc.setJobGroup(group, "run_pipeline job count")
+    try:
+        res = run_pipeline(spark, [ALPHA_PATH, BETA_PATH], str(tmp_path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res.candidates == EXPECTED_BOTH
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
 
 def test_cli_subprocess(tmp_path):

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import datetime
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
@@ -248,3 +248,38 @@ def test_dot_float_bit_identical_to_dot_as_double(spark, pairs):
     import struct
 
     assert struct.pack("<d", row["f"]) == struct.pack("<d", row["d"]), row
+
+
+@given(
+    st.lists(
+        st.tuples(
+            st.text(st.characters() | st.sampled_from("\x00\\'\n017"), max_size=12) | st.none(),
+            st.floats() | st.none(),
+        ),
+        min_size=1,
+        max_size=16,
+    )
+)
+@example(rows=[("x\x0012", -0.0)])  # \0 + digits once read back as 'x\n'
+@settings(max_examples=25, deadline=None)
+def test_local_frame_round_trips_strings_and_doubles(spark, rows):
+    """local_frame renders every cell as SQL literal text; arbitrary
+    strings (quotes, backslashes, control characters followed by digits,
+    non-BMP characters) and doubles (NaN, ±inf, -0.0, subnormals) must
+    read back exactly — doubles bit for bit, NaN as NaN."""
+    import math
+    import struct
+
+    from insurance_claim_data_pipeline_spark.functions.localframe import local_frame
+
+    got = local_frame(spark, [(i, s, d) for i, (s, d) in enumerate(rows)], "i int, s string, d double")
+    back = {r["i"]: (r["s"], r["d"]) for r in got.collect()}
+    for i, (s, d) in enumerate(rows):
+        s_back, d_back = back[i]
+        assert s_back == s
+        if d is None:
+            assert d_back is None
+        elif math.isnan(d):
+            assert math.isnan(d_back)
+        else:
+            assert struct.pack("<d", d_back) == struct.pack("<d", d)
